@@ -12,8 +12,28 @@ import org.apache.spark.sql.SparkSession
   * on). Results land in SCALING.md's recall table.
   *
   *   SPARK_DRIVER_MEM=48g sbt "runMain graft.RecallProbe /tmp/sf1nd"
+  *
+  * Candidate modes (args after the dir) name an arm of
+  * [[ext.SimilarityQueries.nearDupCandidates]] — `banded`, `ivf` or
+  * `union` — followed by optional `:`-separated [[ext.PairDials]]:
+  * `product` (force the product quantizer), `np<N>` (probe count),
+  * `k<K>` (flat cell count). E.g. `ivf:product:np16`, `ivf:k256:np8`,
+  * `union:np16`. An unset dial keeps its count-derived value.
   */
 object RecallProbe {
+
+  /** Candidate pairs for one `arm[:dial]*` mode (grammar above). */
+  private def candidates(spark: SparkSession, dir: String, mode: String) = {
+    val parts = mode.split(":")
+    val dials = parts.tail.foldLeft(ext.PairDials()) {
+      case (p, "product") => p.copy(product = Some(true))
+      case (p, s"np$n") if n.matches("\\d+") => p.copy(nprobe = Some(n.toInt))
+      case (p, s"k$k") if k.matches("\\d+") => p.copy(flatK = Some(k.toInt))
+      case (_, dial) => throw new IllegalArgumentException(
+        s"unknown dial '$dial' in mode '$mode' (product|np<N>|k<K>)")
+    }
+    ext.SimilarityQueries.nearDupCandidates(spark, dir, parts.head, dials)
+  }
 
   /** Union-find over pair lists (driver-side: the probe dirs hold ≤20k
     * vectors / ≤1M pairs — bounded by the probe, not the corpus).
@@ -60,7 +80,7 @@ object RecallProbe {
     if (args.contains("--mass")) {
       args.drop(1).filterNot(_ == "--mass").foreach { mode =>
         val t = System.nanoTime()
-        val cand = ext.SimilarityQueries.nearDupCandidates(spark, dir, mode)
+        val cand = candidates(spark, dir, mode)
         val nCand = cand.count()
         val tc = (System.nanoTime() - t) / 1e9
         val nVer = ext.SimilarityQueries.verifiedNearDup(spark, dir, cand)
@@ -71,21 +91,16 @@ object RecallProbe {
       return
     }
 
-    // hard-negative generator ablation (r13, VERDICT r12 #6; r14 runs it
-    // through the SHIPPED past-ceiling pipeline — ADVICE r13: the r13
-    // sweep measured an unfactored row_number variant while the shipped
-    // path is the factored rank()-with-ties mine, so tie-boundary rows
-    // and factoring were not exactly what was measured): top-K row recall
-    // of the banded and ANN past-ceiling paths against the EXACT
-    // broadcast path, on anchored dirs. A row is recalled iff the same
-    // (query_id, vec_id) appears in the exact top-K (rank-displacements
-    // from a missed better negative count as misses on the displaced
-    // rows, which is the honest metric for "did training see the same
-    // negatives"). Pass `dial` as an nprobe to measure hnNprobeFor(n)'s
-    // value; `nobanded` skips the (measured-lost, slow at 100×) banded
-    // arm on re-runs.
+    // hard-negative probe-count sweep through the SHIPPED past-ceiling
+    // pipeline (factoring decision, rank()-with-ties rep mine, member
+    // expansion): top-K row recall against the EXACT broadcast path, on
+    // anchored dirs. A row is recalled iff the same (query_id, vec_id)
+    // appears in the exact top-K (rank-displacements from a missed
+    // better negative count as misses on the displaced rows, which is
+    // the honest metric for "did training see the same negatives").
+    // Pass `dial` as an nprobe to measure hnNprobeFor(n)'s value.
     if (args.contains("--hardneg")) {
-      val rest = args.drop(1).filterNot(a => a == "--hardneg" || a == "nobanded")
+      val rest = args.drop(1).filterNot(_ == "--hardneg")
       val nprobes = rest.map(n => if (n == "dial")
           ext.SimilarityQueries.hnNprobeFor(
             ext.VectorOps.corpusSize(spark, dir))
@@ -99,19 +114,10 @@ object RecallProbe {
       val exact = rows(ext.SimilarityQueries.hardNegatives(spark, dir,
         maxBroadcast = Long.MaxValue))
       println(f"[hardneg] dir=$dir exact rows=${exact.size} (${(System.nanoTime() - t0) / 1e9}%.1fs)")
-      if (!args.contains("nobanded")) {
-        val t1 = System.nanoTime()
-        val banded = rows(ext.SimilarityQueries.hardNegatives(spark, dir,
-          maxBroadcast = 0, gen = "banded"))
-        println(f"[hardneg] banded    recall=${(banded & exact).size.toDouble / exact.size}%.4f rows=${banded.size} (${(System.nanoTime() - t1) / 1e9}%.1fs)")
-      }
       nprobes.foreach { np =>
         val t = System.nanoTime()
-        // the SHIPPED path, forced past-ceiling: factoring decision,
-        // rank()-with-ties rep mine, member expansion — everything the
-        // >10M-vector consumer actually runs, at this probe count
         val ann = rows(ext.SimilarityQueries.hardNegatives(spark, dir,
-          maxBroadcast = 0, gen = "ann", nprobeOverride = Some(np)))
+          maxBroadcast = 0, dials = ext.PairDials(nprobe = Some(np))))
         println(f"[hardneg] ann np=$np%-4d recall=${(ann & exact).size.toDouble / exact.size}%.4f rows=${ann.size} (${(System.nanoTime() - t) / 1e9}%.1fs)")
       }
       spark.stop()
@@ -178,7 +184,7 @@ object RecallProbe {
         // at the 8.4M product-regime anchor that is ~8.6B candidates
         // built twice. observe() rides the mass count on the hits
         // action's execution instead.
-        val hitsDs = ext.SimilarityQueries.nearDupCandidates(spark, dir, mode)
+        val hitsDs = candidates(spark, dir, mode)
           .observe(s"mass_$mode", count(lit(1)).as("n"))
           .join(broadcast(planted.select("query_id", "vec_id")),
             Seq("query_id", "vec_id"))
@@ -207,16 +213,16 @@ object RecallProbe {
     println(f"[recall] dir=$dir exact=${exact.size} (${tExact}%.1fs)")
 
     // ablation over the past-ceiling candidate arms; "union" is the
-    // path q_dedup_embed actually runs past the ceiling. "ivfp<n>"
-    // forces the product-regime quantizer (the past-flat-cap form) at
-    // probe count n — its recall price vs the flat arm sets
-    // IvfQueries.PAIR_NPROBE_PRODUCT.
+    // path q_dedup_embed actually runs past the ceiling. The product
+    // modes force the past-ceiling quantizer at each probe count — its
+    // recall price vs the flat arm sets IvfQueries.PAIR_NPROBE_PRODUCT.
     // modes may be passed after the dir (ablation subsets re-run fast)
     val modes = if (args.length > 1) args.drop(1).toSeq
-      else Seq("banded", "ivf", "union", "ivfp8", "ivfp16", "ivfp32")
+      else Seq("banded", "ivf", "union",
+        "ivf:product:np8", "ivf:product:np16", "ivf:product:np32")
     val byMode = modes.map { mode =>
       val t = System.nanoTime()
-      val cand = ext.SimilarityQueries.nearDupCandidates(spark, dir, mode)
+      val cand = candidates(spark, dir, mode)
       val nCand = cand.count()
       val got = ext.SimilarityQueries.verifiedNearDup(spark, dir, cand)
         .select("vec_a", "vec_b", "cos").as[(Long, Long, Double)]

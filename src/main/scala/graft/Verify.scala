@@ -1,8 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json for the driver's DuckDB compare and
+  * verify_failures.json listing every query that threw. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg (dev only): comma-separated query names to dump —
@@ -24,14 +26,6 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // shared-subtree memoization, same as Bench (results unaffected)
     etl.Interactions(spark, sfDir).persist()
-    SparkEntry.orderedQueries.foreach { case (name, fn) =>
-      if (wanted(name))
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -44,6 +38,23 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+    // a failing query is recorded by name, class and message in
+    // verify_failures.json (an empty list when all pass); fatal errors
+    // are not caught and end the run
+    val failures = SparkEntry.orderedQueries.filter { case (n, _) => wanted(n) }
+      .flatMap { case (name, fn) =>
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          None
+        } catch { case NonFatal(e) =>
+          System.err.println(s"[verify] $name failed: $e")
+          Some(s"{\"name\": ${q(name)}, \"class\": ${q(e.getClass.getName)}, " +
+            s"\"message\": ${q(String.valueOf(e.getMessage))}}")
+        }
+      }
+    Files.writeString(Paths.get(s"$outDir/verify_failures.json"),
+      failures.mkString("[", ",\n", "]"))
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => wanted(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")

@@ -61,11 +61,9 @@ object DedupCluster {
     * relative to its corpus (it holds only verified near-duplicate
     * PAIRS, not documents), so even a 100 TB corpus's post-verification
     * graph usually fits; past the gate the distributed propagation loop
-    * runs unchanged. Env override for probes/specs.
+    * runs unchanged.
     */
-  private[ext] val CC_DRIVER_MAX_EDGES: Long =
-    sys.env.get("SPARK_GRAFT_CC_DRIVER_MAX").map(_.toLong)
-      .getOrElse(2000000L)
+  private val CC_DRIVER_MAX_EDGES = 2000000
 
   /** `pairs(doc_a, doc_b)` undirected edges → `(id, label)` with
     * `label` = min doc_id of the connected component. Only vertices that
@@ -82,18 +80,14 @@ object DedupCluster {
     // WORSE — see the loop note). Labels are the component minimum —
     // algorithm-independent and deterministic — so a driver union-find
     // over the collected pair list returns the identical relation
-    // (DedupClusterSpec compares all three implementations). The
+    // (DedupClusterSpec compares both implementations). The
     // limit(N+1) collect IS the gate: a graph past the cap falls
     // through to the propagation loop having collected nothing extra.
     if (fwd.schema.fields.forall(_.dataType ==
         org.apache.spark.sql.types.LongType)) {
-      // clamp before toInt (VERDICT r14 #3): an env override above
-      // Int.MaxValue would wrap negative and limit() would throw
-      val cap = math.min(CC_DRIVER_MAX_EDGES, Int.MaxValue - 1L)
       val t0 = System.nanoTime()
-      val collected =
-        fwd.limit((cap + 1).toInt).collect()
-      if (collected.length <= cap) {
+      val collected = fwd.limit(CC_DRIVER_MAX_EDGES + 1).collect()
+      if (collected.length <= CC_DRIVER_MAX_EDGES) {
         val labels = driverUnionFind(collected)
         graft.StageTiming.record(
           s"cc/propagate(driver uf, ${collected.length} pairs)",
@@ -108,7 +102,7 @@ object DedupCluster {
 
   /** The distributed frontier-propagation loop — [[connectedComponents]]'
     * past-the-gate arm, exposed so DedupClusterSpec can prove it equals
-    * the driver union-find and the star contraction on the same graphs.
+    * the driver union-find on the same graphs.
     */
   private[ext] def connectedComponentsPropagate(pairs: DataFrame): DataFrame = {
     val fwd = pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
@@ -213,75 +207,5 @@ object DedupCluster {
     }
     scala.util.Sorting.quickSort(out)(Ordering.by(_._1))
     out
-  }
-
-  /** Both orientations of an edge set (no self-loops assumed). */
-  private def symmetrize(e: DataFrame): DataFrame =
-    e.unionAll(e.select(col("v").as("u"), col("u").as("v"))).distinct()
-
-  /** One star operation (Kiveris et al., SoCC'14 §3) over a SYMMETRIZED
-    * adjacency: every node u with neighborhood minimum m = min(Γ(u) ∪ u)
-    * re-points its strictly-larger neighbors (large-star) or its smaller
-    * neighbors AND itself (small-star) at m. One hash aggregate
-    * (per-node min) + one join — the same per-round shuffle bill as a
-    * propagation round.
-    */
-  private def star(edgesSym: DataFrame, large: Boolean): DataFrame = {
-    val m = edgesSym.groupBy(col("u")).agg(min(col("v")).as("mv"))
-      .select(col("u"), least(col("u"), col("mv")).as("m"))
-    val side =
-      if (large) edgesSym.filter(col("v") > col("u"))
-      else edgesSym.filter(col("v") < col("u"))
-    val pointed = side.join(m, "u").select(col("v").as("u"), col("m").as("v"))
-    val withSelf =
-      if (large) pointed
-      else pointed.unionAll(m.select(col("u"), col("m").as("v")))
-    withSelf.filter(col("u") =!= col("v")).distinct()
-  }
-
-  /** Alternating large-star/small-star connected components — the
-    * O(log n)-round contraction for ADVERSARIAL graphs (long near-dup
-    * chains) where propagation's diameter-many rounds would hurt. Each
-    * round halves component heights instead of walking them; the edge
-    * set converges to a star per component (every non-min member →
-    * component min). Returns the same `(id, label)` relation as
-    * [[connectedComponents]] — `DedupClusterSpec` proves them equal on
-    * chain, triangle and pseudo-random graphs. Propagation stays the
-    * default for dedup's near-clique bundles (diameter 2–3: fewer total
-    * shuffles); this is the documented escape hatch when the dup graph's
-    * shape is unknown.
-    */
-  def connectedComponentsStar(pairs: DataFrame): DataFrame = {
-    val fwd = pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
-    val vertices = fwd.select(col("u")).unionAll(fwd.select(col("v").as("u")))
-      .distinct().localCheckpoint()
-    var (edges, relEdges) = graft.Memo.checkpointTracked(
-      fwd.filter(col("u") =!= col("v")).distinct())
-    var rounds = 0
-    var stable = false
-    while (!stable && rounds < MAX_ROUNDS) {
-      val (afterLarge, relLarge) = graft.Memo.checkpointTracked(
-        star(symmetrize(edges), large = true))
-      val (next, relNext) = graft.Memo.checkpointTracked(
-        star(symmetrize(afterLarge), large = false))
-      // fixpoint = identical edge set round-over-round (both distinct,
-      // so count + one anti-join decide equality exactly)
-      stable = next.count() == edges.count() &&
-        next.join(edges, Seq("u", "v"), "left_anti").count() == 0
-      relLarge() // intermediate star output, superseded immediately
-      relEdges() // previous round's edge set, superseded by `next`
-      edges = next
-      relEdges = relNext
-      rounds += 1
-    }
-    require(stable,
-      s"connectedComponentsStar did not converge in $MAX_ROUNDS rounds")
-    // converged edges are (member, component-min) stars; minima carry no
-    // outgoing row and label themselves via the left join
-    vertices
-      .join(edges.select(col("u").as("id"), col("v").as("lbl")),
-        vertices("u") === col("id"), "left")
-      .select(vertices("u").as("id"),
-        coalesce(col("lbl"), vertices("u")).as("label"))
   }
 }

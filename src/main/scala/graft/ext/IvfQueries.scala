@@ -4,6 +4,21 @@ import graft.{Hashing, QueryDef, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+/** Recall dials of the IVF candidate generators. Each `None` keeps the
+  * count-derived value every registered query runs with: the quantizer
+  * regime ([[IvfQueries.pairUseProduct]]), the probe count
+  * ([[IvfQueries.PAIR_NPROBE_PRODUCT]] or [[IvfQueries.pairNprobeFor]]
+  * for pairs, [[SimilarityQueries.hnNprobeFor]] for hard negatives) and
+  * the flat-regime cell count ([[IvfQueries.pairFlatKFor]]). Setting one
+  * changes recall and candidate mass, never precision: every candidate
+  * is exact-cosine verified downstream.
+  */
+final case class PairDials(product: Option[Boolean] = None,
+    nprobe: Option[Int] = None, flatK: Option[Int] = None) {
+  require(nprobe.forall(_ > 0) && flatK.forall(_ > 0),
+    s"PairDials counts must be positive: $this")
+}
+
 /** IVF-Flat approximate nearest neighbor — the coarse-quantizer scale
   * path (complementing the hyperplane-LSH variant): K deterministic seed
   * centroids → one Lloyd refinement → corpus assigned to Voronoi cells →
@@ -824,7 +839,7 @@ object IvfQueries {
     * regime edge (n = cap·occ ≈ 8.4M, n·k·dim ≈ 3×10¹³ mults) is
     * minutes on one 32-core box and embarrassingly parallel on a
     * cluster, so the flat regime — whose recall is measured to hold at
-    * 2.4M (planted mid 0.99 — the ivff16 row) — now covers to ~8.4M
+    * 2.4M (planted mid 0.99 at flat nprobe 16) — now covers to ~8.4M
     * vectors, aligning the product switchover with the 10M corpus
     * broadcast ceiling where every other vector path re-plans anyway
     * (made literal in r14 — see [[pairUseProduct]]: the r13 guess that
@@ -1011,6 +1026,12 @@ object IvfQueries {
       .map { case (_, c1, c2) => cellId(c1, c2, kHalf) }.toArray
   }
 
+  /** Product-regime probe count: the half-split's geometry loss is
+    * bought back with probes (measured at sf1nd — see the RecallProbe
+    * table in SCALING.md for the nprobe sweep that set this).
+    */
+  val PAIR_NPROBE_PRODUCT = 32
+
   /** IVF multi-probe candidate PAIRS over the whole corpus — the
     * weak-band near-dup generator (r11, VERDICT r10 #3; r12: product
     * quantizer, see [[PAIR_TARGET_OCC]]). Sign-LSH banding is
@@ -1025,44 +1046,28 @@ object IvfQueries {
     * arm). Recall is MEASURED per cosine band by graft.RecallProbe
     * (table in SCALING.md).
     */
-  /** Product-regime probe count: the half-split's geometry loss is
-    * bought back with probes (measured at sf1nd — see the RecallProbe
-    * table in SCALING.md for the nprobe sweep that set this).
-    */
-  val PAIR_NPROBE_PRODUCT = 32
-
   private[ext] def probePairCandidates(spark: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame =
+      d: String, dials: PairDials = PairDials()): org.apache.spark.sql.DataFrame =
     probePairCandidatesFrom(spark, d, Tables.embeddings(spark, d),
-      VectorOps.corpusSize(spark, d))
+      VectorOps.corpusSize(spark, d), dials)
 
   /** DIRECTED ANN candidates (query → corpus) within probed flat-IVF
     * cells — the hard-negative mining generator (r13, VERDICT r12 #6):
-    * each query-slice vector probes its `nprobe` nearest cells and meets
-    * every corpus vector HOMED there; the caller label-filters and
+    * each `qEmb` vector probes its `nprobe` nearest cells and meets
+    * every `cEmb` vector HOMED there; the caller label-filters and
     * exact-cosine top-K ranks. Mass = nprobe·|Q|·occupancy (occupancy is
-    * the fixed [[PAIR_TARGET_OCC]]), vs the banded mine's Σ|q∩bucket|·
-    * |bucket|. The recall trade vs the banded generator is measured on
-    * exact-anchored dirs in SCALING.md's r13 table — hard negatives live
-    * at the high-cosine end, where the data-adaptive cells recall ≥0.96
-    * and sign-LSH bands recall ~0.45.
-    */
-  private[ext] def annQueryCandidates(spark: org.apache.spark.sql.SparkSession,
-      d: String, qSlice: String, nprobe: Int): org.apache.spark.sql.DataFrame = {
-    val emb = Tables.embeddings(spark, d)
-    annQueryCandidatesFrom(spark, d, emb.filter(expr(qSlice)), emb,
-      VectorOps.corpusSize(spark, d), nprobe)
-  }
-
-  /** [[annQueryCandidates]] over EXPLICIT query/corpus embedding slices —
-    * what the hard-negative representative factoring mines over (one row
-    * per distinct (vector, label) group on each side). `n` is the CORPUS
-    * count: the cell dial and the codebook (trained on the full corpus,
-    * Memo-cached per (dir, k) — shared with the near-dup pair arm) stay
-    * the corpus's, so group members land in exactly the cells their rep
-    * does and the rep-level candidate relation is precisely the dedup of
-    * the unfactored one — the row-EQUALITY contract the banded factoring
-    * proved transfers verbatim (ExtSpec).
+    * the fixed [[PAIR_TARGET_OCC]]). Hard negatives live at the
+    * high-cosine end, where the data-adaptive cells recall ≥0.96 and
+    * sign-LSH bands recall ~0.45 (SCALING.md's r13 table).
+    *
+    * `n` is the CORPUS count even when the slices are the hard-negative
+    * representative factoring's (one row per distinct (vector, label)
+    * group on each side): the cell dial and the codebook (trained on the
+    * full corpus, Memo-cached per (dir, k) — shared with the near-dup
+    * pair arm) stay the corpus's, so group members land in exactly the
+    * cells their rep does and the rep-level candidate relation is
+    * precisely the dedup of the unfactored one (ExtSpec proves the rows
+    * equal).
     */
   private[ext] def annQueryCandidatesFrom(
       spark: org.apache.spark.sql.SparkSession, d: String,
@@ -1109,17 +1114,15 @@ object IvfQueries {
 
   /** [[probePairCandidates]] over an EXPLICIT embeddings slice (r12,
     * VERDICT r11 #1a): the representative factoring mines over one row
-    * per distinct vector; the cell dial follows the SLICE count while
-    * the codebooks train on the full corpus (cached per (dir, K)).
-    * `forceProduct`/`nprobeOverride` exist for RecallProbe's regime
-    * ablation only.
+    * per distinct vector; the cell dial follows the SLICE count `n`
+    * while the codebooks train on the full corpus (cached per (dir, K)).
+    * `dials` fix the regime, probe count or flat cell count in place of
+    * their count-derived values; `flatK` applies to the flat regime only.
     */
   private[ext] def probePairCandidatesFrom(
       spark: org.apache.spark.sql.SparkSession, d: String,
       embDf: org.apache.spark.sql.DataFrame, n: Long,
-      forceProduct: Boolean = false,
-      nprobeOverride: Int = 0,
-      flatKOverride: Int = 0): org.apache.spark.sql.DataFrame = {
+      dials: PairDials = PairDials()): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     val vecs = embDf
       .filter(size(col("embedding")) > 0)
@@ -1128,11 +1131,9 @@ object IvfQueries {
         .as("e"))
       .repartition(spark.sparkContext.defaultParallelism)
       .as[(Long, Array[Long])]
-    val product = forceProduct || pairUseProduct(n)
     val (home, probes) =
-      if (product) {
-        val nprobe =
-          if (nprobeOverride > 0) nprobeOverride else PAIR_NPROBE_PRODUCT
+      if (dials.product.getOrElse(pairUseProduct(n))) {
+        val nprobe = dials.nprobe.getOrElse(PAIR_NPROBE_PRODUCT)
         val kHalf = pairHalfKFor(n)
         val (cb1, cb2) = graft.StageTiming.timed("embed/ivf-train") {
           pairCodebooks(spark, d, kHalf)
@@ -1150,11 +1151,9 @@ object IvfQueries {
               probeCells(e, c1, c2, kHalf, nprobe).iterator.map(c => (v, c)) }
           }.toDF("p_id", "cell"))
       } else {
-        val nprobe =
-          if (nprobeOverride > 0) nprobeOverride else pairNprobeFor(n)
+        val nprobe = dials.nprobe.getOrElse(pairNprobeFor(n))
         val cents = graft.StageTiming.timed("embed/ivf-train") {
-          pairFlatCents(spark, d,
-            if (flatKOverride > 0) flatKOverride else pairFlatKFor(n))
+          pairFlatCents(spark, d, dials.flatK.getOrElse(pairFlatKFor(n)))
         }
         if (cents.size == 0)
           return spark.emptyDataset[(Long, Long)].toDF("query_id", "vec_id")

@@ -468,8 +468,8 @@ object SimilarityQueries {
     bandedJoin(bands.filter(qFilter), bands.filter(cFilter), lowerTriangle)
   }
 
-  /** [[bandedCandidates]] over EXPLICIT embedding slices (r12, VERDICT
-    * r11 #1a): the representative factoring feeds the query side a
+  /** Lower-triangle [[bandedCandidates]] within an EXPLICIT embeddings
+    * slice (r12, VERDICT r11 #1a): the representative factoring passes a
     * one-row-per-distinct-vector slice, so on duplicated corpora the
     * band buckets hold distinct vectors instead of every copy — the
     * quadratic-in-duplication bucket blow-up never happens at any rep
@@ -477,14 +477,13 @@ object SimilarityQueries {
     * dialed by the SLICE count (`n`): occupancy, and therefore the
     * recall/cost trade, matches a genuine corpus of that size.
     */
-  private[ext] def bandedCandidatesFrom(
-      spark: org.apache.spark.sql.SparkSession,
-      qEmb: org.apache.spark.sql.DataFrame,
-      cEmb: org.apache.spark.sql.DataFrame, n: Long,
-      lowerTriangle: Boolean): org.apache.spark.sql.DataFrame = {
+  private def bandedCandidatesFrom(spark: org.apache.spark.sql.SparkSession,
+      embDf: org.apache.spark.sql.DataFrame, n: Long)
+      : org.apache.spark.sql.DataFrame = {
     val bits = VectorOps.lshBandBitsFor(n)
-    bandedJoin(sparkBandBlocksFrom(spark, qEmb, bits, LSH_NUM_BANDS),
-      sparkBandBlocksFrom(spark, cEmb, bits, LSH_NUM_BANDS), lowerTriangle)
+    bandedJoin(sparkBandBlocksFrom(spark, embDf, bits, LSH_NUM_BANDS),
+      sparkBandBlocksFrom(spark, embDf, bits, LSH_NUM_BANDS),
+      lowerTriangle = true)
   }
 
   private def bandedJoin(qBands: org.apache.spark.sql.DataFrame,
@@ -539,59 +538,30 @@ object SimilarityQueries {
       }.toDF("vec_id", "bi", "blk")
   }
 
-  /** Past-ceiling near-dup candidate generator — the RecallProbe
-    * ablation surface. "union" is the QUERY path (r11): banded sign-LSH
-    * (identical + strong-cosine mass, theorem-quantified recall) ∪
-    * IVF multi-probe pairs (the data-adaptive arm serving the
-    * cos ∈ [0.4, 0.9) band sign-LSH is theorem-bound to miss —
-    * IvfQueries.probePairCandidates). Both arms are sub-quadratic and
-    * both feed ONE exact-cosine verify, so precision stays 1 whatever
-    * the mix; the union is deduplicated on the unordered pair key
-    * BEFORE the verify, so a pair reaching both arms (or several LSH
-    * bands) is verified once.
+  /** Past-ceiling near-dup candidate pairs `(query_id < vec_id)`, from
+    * one of three arms: "banded" sign-LSH (identical + strong-cosine
+    * mass, theorem-quantified recall), "ivf" multi-probe pairs (the
+    * data-adaptive arm serving the cos ∈ [0.4, 0.9) band sign-LSH is
+    * theorem-bound to miss — [[IvfQueries.probePairCandidates]]), or
+    * "union", the arm q_dedup_embed runs. Both arms are sub-quadratic
+    * and feed ONE exact-cosine verify, so precision is 1 whatever the
+    * arm; a pair may repeat in the output (several bands, both arms,
+    * both directions of a shared cell) and the verify's distinct
+    * collapses it. `dials` set the IVF arm's recall dials; the default
+    * is the count-derived production value of each.
     */
   private[graft] def nearDupCandidates(spark: org.apache.spark.sql.SparkSession,
-      d: String, mode: String = "union"): org.apache.spark.sql.DataFrame = {
+      d: String, arm: String = "union", dials: PairDials = PairDials())
+      : org.apache.spark.sql.DataFrame = {
     def banded = bandedCandidates(spark, d, lit(true), lit(true),
       lowerTriangle = true)
-    mode match {
+    def ivf = IvfQueries.probePairCandidates(spark, d, dials)
+    arm match {
       case "banded" => banded
-      case "ivf" => IvfQueries.probePairCandidates(spark, d)
-      case "union" =>
-        banded.union(IvfQueries.probePairCandidates(spark, d))
-      // product-regime ablation (RecallProbe only): "ivfp<nprobe>"
-      // forces the past-flat-cap quantizer at a given probe count so its
-      // recall price is measurable on dirs small enough to have an
-      // exact anchor
-      case p if p.startsWith("ivfp") =>
-        IvfQueries.probePairCandidatesFrom(spark, d,
-          Tables.embeddings(spark, d), VectorOps.corpusSize(spark, d),
-          forceProduct = true, nprobeOverride = p.stripPrefix("ivfp").toInt)
-      // flat-regime nprobe ablation: "ivff<nprobe>"
-      case p if p.startsWith("ivff") =>
-        IvfQueries.probePairCandidatesFrom(spark, d,
-          Tables.embeddings(spark, d), VectorOps.corpusSize(spark, d),
-          nprobeOverride = p.stripPrefix("ivff").toInt)
-      // equal-mass geometry ablation: "ivfk<k>p<nprobe>" forces BOTH the
-      // flat cell count and the probe count — decides whether holding
-      // weak-band recall at scale should grow nprobe (more small cells
-      // probed) or relax occupancy (fewer, bigger cells): mass is
-      // nprobe·n·(n/k) either way, recall is not
-      case p if p.startsWith("ivfk") =>
-        val Array(ks, ns) = p.stripPrefix("ivfk").split("p")
-        IvfQueries.probePairCandidatesFrom(spark, d,
-          Tables.embeddings(spark, d), VectorOps.corpusSize(spark, d),
-          nprobeOverride = ns.toInt, flatKOverride = ks.toInt)
-      // union ablation at a forced flat nprobe: "unionf<nprobe>" — the
-      // exact query-path shape (banded ∪ IVF) at a candidate dial, so
-      // pairNprobeFor(n) is set on measured UNION recall, not the IVF
-      // arm alone (the banded arm adds ~0.04 in the weak band)
-      case p if p.startsWith("unionf") =>
-        banded.union(IvfQueries.probePairCandidatesFrom(spark, d,
-          Tables.embeddings(spark, d), VectorOps.corpusSize(spark, d),
-          nprobeOverride = p.stripPrefix("unionf").toInt))
+      case "ivf" => ivf
+      case "union" => banded.union(ivf)
       case other => throw new IllegalArgumentException(
-        s"nearDupCandidates mode must be banded|ivf|union|ivfp<n>|ivff<n>|unionf<n>, got $other")
+        s"nearDupCandidates arm must be banded|ivf|union, got $other")
     }
   }
 
@@ -607,7 +577,7 @@ object SimilarityQueries {
   private def nearDupCandidatesFrom(spark: org.apache.spark.sql.SparkSession,
       d: String, embDf: org.apache.spark.sql.DataFrame, n: Long)
       : org.apache.spark.sql.DataFrame =
-    bandedCandidatesFrom(spark, embDf, embDf, n, lowerTriangle = true)
+    bandedCandidatesFrom(spark, embDf, n)
       .union(IvfQueries.probePairCandidatesFrom(spark, d, embDf, n))
 
   /** Exact-cosine verify of candidate pairs against the near-dup
@@ -974,11 +944,10 @@ object SimilarityQueries {
     * than the exact scan at every n (and past [[IvfQueries
     * .PAIR_FLAT_MAX_K]] the capped k with growing occupancy keeps the
     * fraction exactly 1/16), in exchange for recall ≈ 0.5 held flat.
-    * A consumer that needs sub-quadratic total mass instead keeps the
-    * fixed-np arm via `nprobeOverride` and inherits the MEASURED decay
-    * (0.494 → 0.388 → see the r14 table's fixed-16 column): both arms
-    * are contracted, the dial is the default because a mine whose
-    * recall silently halves per 10× of corpus is the worse surprise.
+    * Invariant: the probed cell fraction np/k never falls below 1/16,
+    * so recall at this dial does not decay with n. A fixed probe count
+    * (`PairDials.nprobe`) holds total mass sub-quadratic instead and
+    * decays as the r14 table's fixed-16 column shows (0.494 → 0.388).
     */
   def hnNprobeFor(n: Long): Int =
     math.max(HN_NPROBE, IvfQueries.pairFlatKFor(n) / 16)
@@ -990,19 +959,21 @@ object SimilarityQueries {
     * broadcast corpus + label map with a bounded per-query heap — the
     * exact oracle anchor. Past it: mine within probed flat-IVF cells
     * before the label filter ([[IvfQueries.annQueryCandidatesFrom]] at
-    * [[HN_NPROBE]] probes — r13, adopted over the r9 banded-bucket mine
-    * on the measured top-K recall table above; `gen = "banded"` keeps
-    * the losing generator measurable). The mined negatives are the
-    * hardest IN-CELL near-misses — the high-cosine vectors contrastive
-    * training wants; a vector outside every probed cell is a
-    * low-similarity easy negative that carried no gradient anyway.
+    * [[hnNprobeFor]] probes, adopted over sign-LSH bands on the measured
+    * top-K recall table above). The mined negatives are the hardest
+    * IN-CELL near-misses — the high-cosine vectors contrastive training
+    * wants; a vector outside every probed cell is a low-similarity easy
+    * negative that carried no gradient anyway. `dials.nprobe` replaces
+    * the count-derived probe count; the mine is flat-IVF only, at the
+    * corpus's own cell count, so `product` and `flatK` must stay unset.
     */
   def hardNegatives(spark: org.apache.spark.sql.SparkSession, d: String,
       maxBroadcast: Long = VectorOps.CORPUS_BROADCAST_MAX,
       factorOverride: Option[Boolean] = None,
-      gen: String = "ann",
-      nprobeOverride: Option[Int] = None)
+      dials: PairDials = PairDials())
       : org.apache.spark.sql.DataFrame = {
+    require(dials.product.isEmpty && dials.flatK.isEmpty,
+      s"hard-negative mining takes only an nprobe dial: $dials")
     import spark.implicits._
     val labels = Tables.embeddings(spark, d).select(col("vec_id"), col("label"))
     if (VectorOps.corpusSize(spark, d) > maxBroadcast) {
@@ -1011,7 +982,7 @@ object SimilarityQueries {
       // identical label receive the identical negative list — the
       // candidate set is "label ≠ mine" (so a query's own duplicates
       // are excluded for both by the label filter — self-exclusion is
-      // IMPLIED), band membership is a function of the embedding alone,
+      // IMPLIED), cell membership is a function of the embedding alone,
       // and cosines follow the embedding. So past the ceiling, mine
       // once per distinct (vector, label) group on BOTH sides:
       //  - query side: one rep per group intersecting the query slice;
@@ -1044,18 +1015,10 @@ object SimilarityQueries {
           qStats.getLong(0) >= 2 * qStats.getLong(1))
       val emb0 = Tables.embeddings(spark, d)
       val corpusN = VectorOps.corpusSize(spark, d)
-      val np = nprobeOverride.getOrElse(hnNprobeFor(corpusN))
+      val np = dials.nprobe.getOrElse(hnNprobeFor(corpusN))
       def genCand(qEmb: org.apache.spark.sql.DataFrame,
-          cEmb: org.apache.spark.sql.DataFrame) = gen match {
-        case "ann" =>
-          IvfQueries.annQueryCandidatesFrom(spark, d, qEmb, cEmb,
-            corpusN, np)
-        case "banded" =>
-          bandedCandidatesFrom(spark, qEmb, cEmb, corpusN,
-            lowerTriangle = false)
-        case other => throw new IllegalArgumentException(
-          s"hardNegatives gen must be ann|banded, got $other")
-      }
+          cEmb: org.apache.spark.sql.DataFrame) =
+        IvfQueries.annQueryCandidatesFrom(spark, d, qEmb, cEmb, corpusN, np)
       val cand =
         if (!factor)
           genCand(emb0.filter(expr(negSlice)), emb0)
@@ -1065,13 +1028,13 @@ object SimilarityQueries {
           val cGroups = e8
             .groupBy("vh", "vh2", "label").agg(min(col("vec_id")).as("crep"))
           val emb = Tables.embeddings(spark, d)
-          // band dial stays the CORPUS count, NOT the rep count: members
-          // co-bucket exactly as their reps do at the same width, so the
+          // cell dial stays the CORPUS count, NOT the rep count: members
+          // share cells exactly as their reps do at the same k, so the
           // rep-level candidate relation is precisely the dedup of the
           // unfactored one and the expansion reproduces its rows — a row
           // EQUALITY contract (spec-proven), not a re-dialed recall
           // trade like the near-dup factoring's
-          // the rep-level mine (banded candidates → label filter → exact
+          // the rep-level mine (ANN candidates → label filter → exact
           // cosine → rank-with-ties) is a Memo entry: materialized inside
           // the build so its cost lands as a memo/ stage line in bench
           // artifacts (VERDICT r12 #5), persisted under the byte budget,
@@ -1080,7 +1043,7 @@ object SimilarityQueries {
           // runs several nprobe values in one session, and a dial-blind
           // key would hand later values the first build's rows
           val repTop = graft.Memo.cached(spark, d,
-              s"sim.hardNegRepTop.$gen.np$np") {
+              s"sim.hardNegRepTop.np$np") {
             val repCand = genCand(
               emb.join(qGroups.select(col("qrep").as("vec_id")), "vec_id"),
               emb.join(cGroups.select(col("crep").as("vec_id")), "vec_id"))
@@ -1200,13 +1163,10 @@ object SimilarityQueries {
       // estimated); exact top-K set recall at the count-derived dial
       // (hnNprobeFor: nprobe = k/16, a fixed 1/16 of the corpus probed
       // per query) holds ≥ 0.49 at every measured scale and RISES with
-      // n — 0.494 (10×) / 0.529 (30×) / 0.651 (100×) — where the r13
-      // fixed nprobe 16 decays 0.494 → 0.388 → 0.270. Misses are rank
+      // n — 0.494 (10×) / 0.529 (30×) / 0.651 (100×) — where a fixed
+      // nprobe 16 decays 0.494 → 0.388 → 0.270. Misses are rank
       // DISPLACEMENTS: a missed true top-K negative is replaced by the
-      // next-hardest in-cell near-miss, not by an easy negative. The
-      // fixed-np arm stays selectable (nprobeOverride) for consumers
-      // trading that recall for linear total mass; its decay is the
-      // measured column in the same table.
+      // next-hardest in-cell near-miss, not by an easy negative.
       hardNegatives(spark, d)
     },
 

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.functions.{BloomProbe, FixedDot, H60Expr, SortedIntersectSize}
+import graft.functions.{FixedDot, H60Expr, SortedIntersectSize}
 import org.apache.spark.sql.SparkSessionExtensions
 
 /** Session-extension entry point (SparkSessionExtensions): registers the
@@ -21,8 +21,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction((FixedDot.identifier, FixedDot.info, FixedDot.builder))
     ext.injectFunction((SortedIntersectSize.identifier,
       SortedIntersectSize.info, SortedIntersectSize.builder))
-    ext.injectFunction((BloomProbe.identifier, BloomProbe.info,
-      BloomProbe.builder))
     ext.injectFunction((H60Expr.identifier, H60Expr.info, H60Expr.builder))
   }
 }

@@ -101,12 +101,12 @@ class ExtSpec extends SparkSpec {
     assert(viaReduced.nonEmpty && viaReduced.sameElements(viaPairs))
   }
 
-  test("hard-negative representative factoring matches the unfactored banded path row-for-row") {
+  test("hard-negative representative factoring matches the unfactored ANN path row-for-row") {
     // duplicated fixture: 3 copies of every vector (labels copied with
     // them), ids shifted by multiples of 20 so slice membership is
     // preserved — every (vector, label) group has 3 members. The
     // factored path (rep mining + rank-with-ties + member expansion)
-    // must reproduce the unfactored banded past-ceiling rows exactly.
+    // must reproduce the unfactored ANN past-ceiling rows exactly.
     val OFF = 1000000L // multiple of 20: preserves negSlice membership
     val tmp = java.nio.file.Files.createTempDirectory("hn_factor").toString
     val base = spark.read.parquet(sf() + "/embeddings.parquet")
@@ -139,8 +139,10 @@ class ExtSpec extends SparkSpec {
     graft.Memo.release(spark, sf())
     def objEntries = graft.Memo.entries(spark)
       .filter(e => e.startsWith(sf()) && e.contains("sim.pair"))
-    SimilarityQueries.nearDupCandidates(spark, sf(), "ivff8")
-    SimilarityQueries.nearDupCandidates(spark, sf(), "ivfp8")
+    val flat8 = PairDials(nprobe = Some(8))
+    SimilarityQueries.nearDupCandidates(spark, sf(), "ivf", flat8)
+    SimilarityQueries.nearDupCandidates(spark, sf(), "ivf",
+      PairDials(product = Some(true), nprobe = Some(8)))
     val after = objEntries
     assert(after.exists(_.contains("sim.pairFlatCents.k")), s"entries: $after")
     assert(after.exists(_.contains("sim.pairCodebooks.k")), s"entries: $after")
@@ -149,11 +151,11 @@ class ExtSpec extends SparkSpec {
       .map(_._3).sum
     val flatBuilds = builds("sim.pairFlatCents")
     // cached: a second plan build must NOT re-train
-    SimilarityQueries.nearDupCandidates(spark, sf(), "ivff8")
+    SimilarityQueries.nearDupCandidates(spark, sf(), "ivf", flat8)
     assert(builds("sim.pairFlatCents") == flatBuilds, "second build must hit the cache")
     graft.Memo.release(spark, sf())
     assert(objEntries.isEmpty, s"release must drop codebook entries: $objEntries")
-    SimilarityQueries.nearDupCandidates(spark, sf(), "ivff8")
+    SimilarityQueries.nearDupCandidates(spark, sf(), "ivf", flat8)
     assert(builds("sim.pairFlatCents") == flatBuilds + 1,
       "post-release build must re-train")
     graft.Memo.release(spark, sf())
@@ -225,11 +227,11 @@ class ExtSpec extends SparkSpec {
     // maxBroadcast = 0 forces the path large corpora switch to
     // automatically. Contract split (r9): bruteForceTopK/quantTopK stay
     // EXACT distributed joins — row-identical to the broadcast path.
-    // embedNearDup/semanticDecontam/hardNegatives switch to LSH-banded
-    // candidates + exact verify — every returned row must carry the
-    // exact cosine and satisfy the query's predicate, but full recall
-    // parity is no longer the claim (banding may drop pairs whose
-    // vectors disagree in every band).
+    // embedNearDup/semanticDecontam switch to LSH-banded candidates and
+    // hardNegatives to IVF-cell candidates, each + exact verify — every
+    // returned row must carry the exact cosine and satisfy the query's
+    // predicate, but full recall parity is no longer the claim (a pair
+    // can miss every band or every probed cell).
     def topk(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id"),
         r.getAs[Double]("cos"), r.getAs[Int]("rn"))).sortBy(t => (t._1, t._4))
